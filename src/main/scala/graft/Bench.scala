@@ -35,15 +35,6 @@ object Bench {
     (for (c <- calibMin; f <- calibFloor if f > 0.0)
       yield math.max(1.0, c / f)).getOrElse(1.0)
 
-  /** Parse bench_floor.json's flat name → seconds map (the `_comment`
-    * key is prose and skipped). Regex-based on purpose: no JSON library
-    * in the dependency set, and the file is machine-written. */
-  private[graft] def parseFloors(txt: String): Map[String, Double] =
-    "\"(q[A-Za-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r
-      .findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toDouble)
-      .toMap
-
   /** Names whose measured min exceeds [[SuspectFactor]] × their
     * committed floor — the per-query validity flag. Round 10's record
     * archived 5-11× inflated mins for five queries with
@@ -59,10 +50,8 @@ object Bench {
     * is a genuine engine regression (see [[calibRatio]]). */
   private[graft] def floorSuspects(mins: Map[String, Double],
       floors: Map[String, Double], calib: Double = 1.0): Seq[String] =
-    mins.toSeq.sorted.collect {
-      case (q, m) if floors.get(q).exists(f =>
-        m / calib > SuspectFactor * f) => q
-    }
+    Floors.suspects(mins.map { case (q, m) => q -> m / calib }, floors,
+      mins.keys.toSeq.sorted.map(_ -> SuspectFactor))
 
   /** Min-of-3 with an outlier retry, over an injectable measurement
     * function (the spec drives this with synthetic timings). Rounds 4-6
@@ -124,6 +113,17 @@ object Bench {
     }
   }
 
+  /** The measured action: one run of `q` forced with `.count()`, in wall
+    * seconds (a failure is reported and its time still returned). Bench
+    * and [[tools.Inspect]] time the same call. */
+  private[graft] def measureOnce(q: Q, spark: SparkSession,
+      sfDir: String): Double = {
+    val t0 = System.nanoTime()
+    try q.run(spark, sfDir).count()
+    catch { case e: Throwable => System.err.println(s"[bench] ${q.name}: ${e.getMessage}") }
+    (System.nanoTime() - t0) / 1e9
+  }
+
   private def median(ts: Seq[Double]): Double = {
     val s = ts.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
@@ -131,17 +131,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bench")
 
     val byName = Registry.benchSet.map(q => q.name -> q).toMap
 
@@ -157,12 +147,7 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench-warm] ${q.name}: ${e.getMessage}") }
     }
 
-    def measure(name: String): Double = {
-      val t0 = System.nanoTime()
-      try byName(name).run(spark, sfDir).count()
-      catch { case e: Throwable => System.err.println(s"[bench] $name: ${e.getMessage}") }
-      (System.nanoTime() - t0) / 1e9
-    }
+    def measure(name: String): Double = measureOnce(byName(name), spark, sfDir)
     val firstPass = robustTimes(Registry.benchSet.map(_.name), measure)
 
     // Validity stamping, two layers (each has caught a real polluted
@@ -174,10 +159,7 @@ object Bench {
     //    runs (catches a machine that is STILL loaded, and still works
     //    if the floors file ever goes missing).
     val CalibQ = "q128_tpch_q6"
-    val floorsTxt = Seq("bench_floor.json", "target/bench_floor.json").view
-      .map(java.nio.file.Paths.get(_)).find(java.nio.file.Files.exists(_))
-      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-    val floors = floorsTxt.map(parseFloors).getOrElse(Map.empty)
+    val floors = Floors.load("bench_floor.json")
     // heal transient-load suspects: confirm idle via the calibration
     // probe (min-of-3 under 1.3x its floor — IdleConfirmFactor, strict
     // so a retry never just re-records ambient load), with DOUBLING

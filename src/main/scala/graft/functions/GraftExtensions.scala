@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions entry point for graft's native expressions —
   * the deployment-grade registration path:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  *   // or: --conf spark.sql.extensions=graft.functions.GraftExtensions
+  *   --conf spark.sql.extensions=graft.functions.GraftExtensions
+  *   // as every graft main sets it ([[graft.GraftSession]]), or
+  *   // builder.withExtensions(new GraftExtensions)
   *
   * (The per-session `VectorFunctions.register`/`TextFunctions.register`
   * helpers register the same functions on an already-built session, which

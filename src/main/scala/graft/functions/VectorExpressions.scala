@@ -98,7 +98,6 @@ case class DotProduct(left: Expression, right: Expression)
   * occur for parquet float embeddings; the guard keeps eval total). */
 case class PqEncodeCodes(child: Expression, cb: Array[Array[Array[Double]]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   import org.apache.spark.sql.catalyst.util.GenericArrayData
   import org.apache.spark.sql.types._

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 

@@ -132,7 +132,7 @@ object IvfPq {
   private def probePlanFrom(spark: SparkSession, indexDir: String,
       centroids: Array[(Int, Array[Double])],
       q: Array[Double], nprobe: Int,
-      orphans: Seq[Int] = Seq.empty): (Seq[Int], DataFrame) = {
+      orphans: Seq[Int]): (Seq[Int], DataFrame) = {
     val probes = (centroids.map { case (cell, c) =>
       (c.zip(q).map { case (a, b) => (a - b) * (a - b) }.sum, cell)
     }.sorted.take(nprobe).map(_._2).toSeq ++ orphans).distinct

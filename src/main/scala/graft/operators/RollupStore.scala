@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Dsl, Q, Tables}
+import graft.{Q, Tables}
 import graft.Dsl._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -239,7 +239,7 @@ object RollupStore {
     * commit. Crash points: "written" (staged, invisible), "committed"
     * ("swapped" kept as an alias for the spec), "vacuumed". */
   private def writeSwap(spark: SparkSession, next: DataFrame, dir: String,
-      crashPoint: String => Unit, opId: Option[Long] = None,
+      crashPoint: String => Unit, opId: Option[Long],
       fullVacuum: Boolean = false): Unit = {
     val seg = IndexManifest.newSegment(spark, dir, "rollup")(p =>
       next.repartition(col("day")).write.mode("overwrite").parquet(p))

@@ -104,7 +104,6 @@ object BotMonitor {
 
   def cadenceAlerts(evts: Dataset[UserEvt],
       idleTtlSeconds: Option[Long] = None): Dataset[CadenceAlert] = {
-    implicit val evtEnc = Encoders.product[UserEvt]
     implicit val outEnc = Encoders.product[CadenceAlert]
     implicit val stateEnc = Encoders.product[CadenceState]
     implicit val longEnc = Encoders.scalaLong
@@ -159,7 +158,6 @@ object BotMonitor {
 
   def botAlerts(evts: Dataset[UserEvt],
       idleTtlSeconds: Option[Long] = None): Dataset[BotAlert] = {
-    implicit val evtEnc = Encoders.product[UserEvt]
     implicit val outEnc = Encoders.product[BotAlert]
     implicit val stateEnc = Encoders.product[BotState]
     implicit val longEnc = Encoders.scalaLong

@@ -45,7 +45,6 @@ object Funnel {
 
   def conversions(events: Dataset[Evt],
       idleTtlSeconds: Option[Long] = None): Dataset[Conversion] = {
-    implicit val evtEnc = Encoders.product[Evt]
     implicit val outEnc = Encoders.product[Conversion]
     implicit val stateEnc = Encoders.product[FunnelState]
     implicit val longEnc = Encoders.scalaLong

@@ -64,7 +64,6 @@ object QualityMonitor {
 
   def qualityDrift(docs: Dataset[DocEvt], windowSeconds: Long)
       : Dataset[WinQuality] = {
-    implicit val evtEnc = Encoders.product[DocEvt]
     implicit val outEnc = Encoders.product[WinQuality]
     implicit val stateEnc = Encoders.product[WinState]
     implicit val strEnc = Encoders.STRING

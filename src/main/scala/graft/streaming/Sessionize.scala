@@ -23,7 +23,6 @@ object Sessionize {
       session_end: Timestamp, n_events: Int)
 
   def sessionize(events: Dataset[Evt], gapSeconds: Long): Dataset[Session] = {
-    implicit val evtEnc = Encoders.product[Evt]
     implicit val outEnc = Encoders.product[Session]
     implicit val stateEnc = Encoders.product[SessionState]
     implicit val longEnc = Encoders.scalaLong
@@ -94,7 +93,6 @@ object Sessionize {
     * unique (true of the driver wire; the spec's fixture keeps it). */
   def burstCounts(events: Dataset[Evt],
       horizonSeconds: Long = 60): Dataset[Burst] = {
-    implicit val evtEnc = Encoders.product[Evt]
     implicit val outEnc = Encoders.product[Burst]
     implicit val stateEnc = Encoders.product[BurstState]
     implicit val longEnc = Encoders.scalaLong

@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Floors, GraftSession, Tables}
 import graft.operators.IvfIndex
 import graft.streaming.AnnMaintenance
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN-maintainer scale probe — the [[IngestScale]] discipline applied
@@ -50,7 +49,7 @@ object AnnScale {
 
   private[graft] def floorSuspects(metrics: Map[String, Double],
       floors: Map[String, Double]): Seq[String] =
-    IngestScale.flagAgainstFloors(metrics, floors,
+    Floors.suspects(metrics, floors,
       Seq("build_sec" -> 2.0, "rebalance_sec" -> 2.0,
         "replay_skip_sec" -> 2.0,
         "probe_p50_sec" -> 2.0, "probe_p99_sec" -> 2.0,
@@ -73,17 +72,7 @@ object AnnScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(8)
     require(nBatches >= 2, "need a cold batch AND a warm curve")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ann-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-ann-scale")
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -205,13 +194,7 @@ object AnnScale {
       "probe_p99_under_rebalance_sec" -> pct(under, 0.99),
       "filtered_probe_p50_sec" -> pct(filteredQ, 0.50),
       "filtered_probe_p99_sec" -> pct(filteredQ, 0.99))
-    val floors = Seq("ann_floor.json", "target/ann_floor.json").view
-      .map(java.nio.file.Paths.get(_))
-      .find(java.nio.file.Files.exists(_))
-      .map(p => IngestScale.parseFloors(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
-      .getOrElse(Map.empty)
-    val suspects = floorSuspects(metrics, floors)
+    val suspects = floorSuspects(metrics, Floors.load("ann_floor.json"))
     val suspectsJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
     // the q267 serving-health audit row, archived with the run
     val h = IvfIndex.servingHealth(spark, idx).collect()(0)

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.operators.TrainingPrep
-import org.apache.spark.sql.SparkSession
 
 /** Production-vocabulary BPE scale probe. Not part of the driver
   * contract — a dev tool behind the bench_floor.json note: q147's
@@ -23,17 +22,7 @@ object BpeScale {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val k = args.lift(1).map(_.toInt).getOrElse(2048)
     val prefix = args.lift(2).map(_.toInt).getOrElse(32)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bpe-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-bpe-scale")
     val docs = Tables.documents(spark, sfDir)
 
     def timed[A](f: => A): (A, Double) = {

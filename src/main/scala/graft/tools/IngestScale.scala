@@ -1,9 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Floors, GraftSession, Tables}
 import graft.operators.{Bm25Index, LshBandIndex}
 import graft.streaming.IngestPipeline
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ingest-pipeline scale probe. Not part of the driver contract — the
@@ -30,24 +29,6 @@ import org.apache.spark.sql.functions._
   */
 object IngestScale {
 
-  /** The shared flag logic both scale tools use (this and [[AnnScale]]
-    * — one copy, or a threshold tweak silently diverges them): time
-    * metrics flag HIGH past their per-key factor × floor, throughput
-    * metrics flag LOW under half their own floor, unknown keys never
-    * flag. */
-  private[graft] def flagAgainstFloors(metrics: Map[String, Double],
-      floors: Map[String, Double], timeKeys: Seq[(String, Double)],
-      throughputKeys: Seq[String]): Seq[String] = {
-    def over(k: String, factor: Double) =
-      (for (m <- metrics.get(k); f <- floors.get(k)) yield m > factor * f)
-        .getOrElse(false)
-    def under(k: String) =
-      (for (m <- metrics.get(k); f <- floors.get(k)) yield m < f / 2.0)
-        .getOrElse(false)
-    timeKeys.collect { case (k, f) if over(k, f) => k } ++
-      throughputKeys.filter(under)
-  }
-
   /** This tool's key set and factors: time metrics flag at 2× (the
     * Bench SuspectFactor), except the marker skip, whose floor is
     * millisecond-scale and GC-jittery (5×); cold and warm throughput
@@ -57,30 +38,16 @@ object IngestScale {
     * cold start (the round-15 verdict's dulled-alarm finding). */
   private[graft] def floorSuspects(metrics: Map[String, Double],
       floors: Map[String, Double]): Seq[String] =
-    flagAgainstFloors(metrics, floors,
+    Floors.suspects(metrics, floors,
       Seq("build_sec" -> 2.0, "repair_replay_sec" -> 2.0,
         "marker_skip_sec" -> 5.0),
       Seq("cold_docs_per_sec", "min_warm_docs_per_sec"))
-
-  private[graft] def parseFloors(txt: String): Map[String, Double] =
-    "\"([a-z0-9_]+)\"\\s*:\\s*([0-9.]+)".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toDouble).toMap
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nBatches = args.lift(1).map(_.toInt).getOrElse(5)
     require(nBatches >= 2, "need a cold batch AND a warm curve")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-ingest-scale")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession("graft-ingest-scale")
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -159,13 +126,7 @@ object IngestScale {
     val metrics = Map("build_sec" -> tBuild, "marker_skip_sec" -> tSkip,
       "repair_replay_sec" -> tRepair, "cold_docs_per_sec" -> coldDps,
       "min_warm_docs_per_sec" -> warmDps)
-    val floors = Seq("ingest_floor.json", "target/ingest_floor.json").view
-      .map(java.nio.file.Paths.get(_))
-      .find(java.nio.file.Files.exists(_))
-      .map(p => parseFloors(
-        new String(java.nio.file.Files.readAllBytes(p), "UTF-8")))
-      .getOrElse(Map.empty)
-    val suspects = floorSuspects(metrics, floors)
+    val suspects = floorSuspects(metrics, Floors.load("ingest_floor.json"))
     val suspectsJson = suspects.map("\"" + _ + "\"").mkString("[", ",", "]")
     // the freshness/lag audit over both indexes' manifest logs — the
     // per-index observability row a fleet dashboard scrapes (version

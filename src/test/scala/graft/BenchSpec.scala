@@ -17,13 +17,27 @@ class BenchSpec extends AnyFunSuite {
   test("parseFloors reads the committed bench_floor.json (every bench query has a floor)") {
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("bench_floor.json")), "UTF-8")
-    val floors = Bench.parseFloors(txt)
+    val floors = Floors.parse(txt)
     val benchNames = Registry.benchSet.map(_.name)
     benchNames.foreach { n =>
       assert(floors.contains(n), s"bench query $n has no committed floor")
       assert(floors(n) > 0.0 && floors(n) < 60.0, s"$n floor ${floors(n)} implausible")
     }
     assert(!floors.contains("_comment"))
+  }
+
+  test("Floors.parse returns exactly the numeric keys of the three committed floor files") {
+    // the files hold one key per line; every key but `_comment` is numeric
+    for ((file, n) <- Seq("bench_floor.json" -> 49, "ingest_floor.json" -> 5,
+        "ann_floor.json" -> 11)) {
+      val txt = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(file)), "UTF-8")
+      val keys = txt.linesIterator.map(_.trim).filter(_.startsWith("\""))
+        .map(_.drop(1).takeWhile(_ != '"')).filter(_ != "_comment").toSet
+      assert(keys.size == n, s"$file: expected $n numeric keys, found ${keys.size}")
+      assert(Floors.parse(txt).keySet == keys, s"$file parsed keys differ")
+      assert(Floors.load(file) == Floors.parse(txt))
+    }
   }
 
   test("a mid-run load that ends before the probe flags exactly the affected queries") {
@@ -130,7 +144,7 @@ class BenchSpec extends AnyFunSuite {
   test("ingest_floor.json parses and carries every IngestScale metric (the pipeline's committed floors)") {
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("ingest_floor.json")), "UTF-8")
-    val floors = tools.IngestScale.parseFloors(txt)
+    val floors = Floors.parse(txt)
     for (k <- Seq("build_sec", "marker_skip_sec", "repair_replay_sec",
         "cold_docs_per_sec", "min_warm_docs_per_sec")) {
       assert(floors.contains(k), s"ingest floor $k missing")
@@ -183,7 +197,7 @@ class BenchSpec extends AnyFunSuite {
   test("ann_floor.json parses and carries every AnnScale metric (the ANN maintainer's committed floors)") {
     val txt = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("ann_floor.json")), "UTF-8")
-    val floors = tools.IngestScale.parseFloors(txt)
+    val floors = Floors.parse(txt)
     for (k <- Seq("build_sec", "rebalance_sec", "replay_skip_sec",
         "cold_vecs_per_sec", "min_warm_vecs_per_sec",
         "probe_p50_sec", "probe_p99_sec",

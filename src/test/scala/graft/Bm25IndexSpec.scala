@@ -332,8 +332,7 @@ class Bm25IndexSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("qid", "term")
     val df = Bm25Index.probe(spark, qLocal, dir)
     df.collect()
-    val plan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+    val plan = tools.Inspect.finalPlan(df)
     val scans = "file:[^\\]\\s,]*".r.findAllIn(plan).toSeq
     assert(scans.nonEmpty, s"no file scans found:\n$plan")
     scans.foreach(s => assert(s.contains(dir) || !s.contains(".parquet"),

@@ -436,7 +436,6 @@ class CrossMaintenanceFuzzSpec extends AnyFunSuite {
         killed.add(name); ()
       }
     }
-    @volatile var probersStop = false
     def maintainer(name: String, ops: Seq[() => Unit],
         idempotentLast: () => Unit): Thread = new Thread(() => {
       try {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Skew
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SparkSessionExtensions registration, IVF ANN recall, and salted-join

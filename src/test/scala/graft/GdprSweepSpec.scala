@@ -181,7 +181,6 @@ class GdprSweepSpec extends AnyFunSuite {
   }
 
   test("a reader pinned before the sweep keeps serving the pre-sweep view under retention; a fresh reader sees absence") {
-    import spark.implicits._
     // the stated 100 TB motivation for the manifest layer: long-running
     // readers DURING a deletion-compliance sweep. The reader pins its
     // snapshot, the whole delete+compact runs under retention depth 1,

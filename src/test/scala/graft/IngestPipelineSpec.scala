@@ -3,8 +3,9 @@ package graft
 import graft.streaming.IngestPipeline
 import graft.streaming.IngestPipeline.Doc
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import java.nio.file.Files
 
 /** The composed ingest pipeline (quality gate → LSH near-dup admit →
@@ -114,6 +115,19 @@ class IngestPipelineSpec extends AnyFunSuite {
       .collect().map(_.toString).toSeq,
     operators.Bm25Index.appliedOp(spark, bm))
 
+  /** Run `body`, which must fail at its planted crash seam: the planted
+    * "boom" must be somewhere in the thrown exception's cause chain (a
+    * Spark wrapper around it is fine, any other failure is not). */
+  private def crashesAtSeam(body: => Any): Unit = {
+    val e = intercept[Throwable](body)
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    if (!chain.exists(t => Option(t.getMessage).exists(_.contains("boom")))) {
+      val trace = new java.io.StringWriter
+      e.printStackTrace(new java.io.PrintWriter(trace))
+      fail(s"the planted crash is not in the cause chain:\n$trace")
+    }
+  }
+
   test("crash at every seam + replay converges to the clean-run state; done batches skip in full") {
     // the clean run is the target state
     val (lshC, bmC) = freshIndexes()
@@ -126,7 +140,7 @@ class IngestPipelineSpec extends AnyFunSuite {
       "committed", "lsh:appended", "postings:appended", "stats:staged")
     for (seam <- seams) {
       val (lsh, bm) = freshIndexes()
-      intercept[RuntimeException] {
+      crashesAtSeam {
         IngestPipeline.ingestBatchImpl(spark, wire(), lsh, bm,
           p => if (p == seam) throw new RuntimeException(s"boom at $p"),
           opId = Some(1L))
@@ -147,7 +161,7 @@ class IngestPipelineSpec extends AnyFunSuite {
     // stats:swapped fires after the marker landed with the final write:
     // the replay must SKIP in full, not re-run
     val (lsh2, bm2) = freshIndexes()
-    intercept[RuntimeException] {
+    crashesAtSeam {
       IngestPipeline.ingestBatchImpl(spark, wire(), lsh2, bm2,
         p => if (p == "stats:swapped") throw new RuntimeException("boom"),
         opId = Some(1L))
@@ -194,14 +208,23 @@ class IngestPipelineSpec extends AnyFunSuite {
     }
 
     // double crash: the headline seam, then a crash inside the REPAIR
-    // path itself; the third replay still converges
+    // path itself; the third replay still converges. The restarted
+    // streams above must be fully gone first: no active query and no
+    // job still running on their behalf.
+    eventually(timeout(Span(60, Seconds))) {
+      assert(spark.streams.active.isEmpty,
+        s"streams still active: ${spark.streams.active.map(_.name).toSeq}")
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+        "jobs still active: " +
+          spark.sparkContext.statusTracker.getActiveJobIds.toSeq)
+    }
     val (lsh3, bm3) = freshIndexes()
-    intercept[RuntimeException] {
+    crashesAtSeam {
       IngestPipeline.ingestBatchImpl(spark, wire(), lsh3, bm3,
         p => if (p == "lsh:appended") throw new RuntimeException("boom"),
         opId = Some(1L))
     }
-    intercept[RuntimeException] {
+    crashesAtSeam {
       IngestPipeline.ingestBatchImpl(spark, wire(), lsh3, bm3,
         p => if (p == "bm25:repair") throw new RuntimeException("boom"),
         opId = Some(1L))

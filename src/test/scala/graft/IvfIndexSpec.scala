@@ -719,7 +719,7 @@ class IvfIndexSpec extends AnyFunSuite {
 
   test("label_stats tracks maintenance: a split refreshes the forecast; a window of stale stats falls back instead of failing healthy filtered queries") {
     import spark.implicits._
-    import operators.{IvfIndex, Similarity}
+    import operators.IvfIndex
     val dir = Files.createTempDirectory("graft-ivf-stats-maint").toFile
     dir.deleteOnExit()
     val idx = dir.getAbsolutePath

@@ -171,7 +171,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // the per-part cap is a partitioned window, not an aggregate joined
     // back — the join-back form scanned the fact table twice (pruning
     // de-canonicalized the branches, so exchange reuse never fired)
-    assert("lineitem\\.parquet".r.findAllIn(p).size == 1,
+    assert(tools.Inspect.scanCounts(p)("lineitem") == 1,
       s"q134 must read the fact table exactly once:\n$p")
   }
 
@@ -259,11 +259,10 @@ class PlanAuditSpec extends AnyFunSuite {
     for ((q, fact, expected) <- pinned) {
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect()
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
+      val p = tools.Inspect.finalPlan(df)
       assert(p.contains("ReusedExchange"),
         s"$q scalar branch must reuse the aggregated exchange:\n$p")
-      assert(s"$fact\\.parquet".r.findAllIn(p).size == expected,
+      assert(tools.Inspect.scanCounts(p)(fact) == expected,
         s"$q must read $fact exactly $expected time(s) in the final plan:\n$p")
     }
   }
@@ -282,11 +281,10 @@ class PlanAuditSpec extends AnyFunSuite {
     for (q <- Seq("q143_substring_dedup", "q185_memorization_audit")) {
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect()
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
+      val p = tools.Inspect.finalPlan(df)
       assert(p.contains("InMemoryTableScan"),
         s"$q must read the shared window-hash cache:\n$p")
-      assert("documents\\.parquet".r.findAllIn(p).size == 1,
+      assert(tools.Inspect.scanCounts(p)("documents") == 1,
         s"$q must scan documents exactly once in the final plan:\n$p")
       spark.catalog.clearCache()
     }
@@ -308,8 +306,7 @@ class PlanAuditSpec extends AnyFunSuite {
         "q156_gopher_rules")) {
       val df = SparkEntry.queries(q)(spark, sf)
       df.collect()
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
+      val p = tools.Inspect.finalPlan(df)
       val required = "Exchange [a-z]*partitioning[^\\n]*ENSURE_REQUIREMENTS".r
         .findAllIn(p).toSeq
       assert(required.forall(_.contains("rangepartitioning")),
@@ -328,9 +325,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // a full-row shuffle) triaged in COVERAGE.md. Raising a value needs
     // that triage; a branch-pruning regression that de-canonicalizes a
     // shared subtree (the q85/q133 trap) fails here instead of waiting
-    // for a manual sweep. Counts measured by graft.tools.ReuseAudit.
-    val tables = Seq("lineitem", "orders", "customer", "part", "supplier",
-      "nation", "region", "documents", "embeddings", "events")
+    // for a manual sweep. Counts measured by graft.tools.Inspect.
     // Queries that .cache() an internally-reused frame print their
     // cache-BUILD scans or an InMemoryTableScan depending on what the
     // session's cache already holds, so their textual scan count is
@@ -651,14 +646,12 @@ class PlanAuditSpec extends AnyFunSuite {
     for ((name, fn) <- SparkEntry.queries if !eagerConstruction(name)) {
       val df = fn(spark, sf)
       df.collect()
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      for (t <- tables) {
-        val n = s"$t\\.parquet".r.findAllIn(p).size
+      val p = tools.Inspect.finalPlan(df)
+      for ((t, n) <- tools.Inspect.scanCounts(p)) {
         val cap = multi.getOrElse(name, Map.empty).getOrElse(t, 1)
         assert(n <= cap,
           s"$name reads $t $n times (allowance $cap) — branch-pruning " +
-            s"regression? run graft.tools.ReuseAudit $name\n$p")
+            s"regression? run graft.tools.Inspect $name\n$p")
       }
     }
   }

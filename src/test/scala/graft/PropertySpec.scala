@@ -12,7 +12,7 @@ class PropertySpec extends AnyFunSuite {
 
   /** Minimal forAll over scalacheck Gen (no scalatestplus bridge in the
     * offline dependency set). */
-  private def forSamples[A](gen: Gen[A], n: Int = 20)(body: A => Unit): Unit = {
+  private def forSamples[A](gen: Gen[A], n: Int)(body: A => Unit): Unit = {
     val seed0 = org.scalacheck.rng.Seed(42L)
     Iterator.iterate(seed0)(_.next).take(n).foreach { seed =>
       gen.apply(Gen.Parameters.default, seed).foreach(body)

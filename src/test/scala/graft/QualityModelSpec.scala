@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Model-based quality filtering semantics: the classifier must learn
   * its weak teacher, and compressibility must rank repetitive text below
@@ -138,7 +137,6 @@ class QualityModelSpec extends AnyFunSuite {
   }
 
   test("q187 calibration buckets are well-formed and ECE-bounded on the teacher") {
-    import org.apache.spark.sql.functions._
     val sf = TestSpark.sf0001
     val rows = SparkEntry.queries("q187_scorer_calibration")(spark, sf)
       .collect()

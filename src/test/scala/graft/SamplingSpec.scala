@@ -49,7 +49,6 @@ class SamplingSpec extends AnyFunSuite {
 
   test("temperature sampling flattens the language mix toward sqrt(n)") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // 400/100/25 docs: keep probabilities sqrt(25/n) = 0.25 / 0.5 / 1.0
     val docs = (
       (0 until 400).map(i => (i.toLong, s"a $i", "aa", "s", 10L)) ++
@@ -83,7 +82,6 @@ class SamplingSpec extends AnyFunSuite {
 
   test("DSIR importance score matches an independent plain-Scala recomputation; acceptance is band-consistent") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     def score(text: String): Double = {
       val t = text.trim.toLowerCase.split("\\s+").toSeq
       val grams = t ++ t.sliding(2).filter(_.size == 2).map(_.mkString(" "))

@@ -621,7 +621,6 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("q228 multi-probe dominates single-probe; single-probe hits cross-check q43 vs q42 for vec 0") {
-    import spark.implicits._
     val sf = TestSpark.sf0001
     val rows = SparkEntry.queries("q228_multiprobe_lsh_recall")(spark, sf)
       .collect().map(r => r.getLong(0) ->

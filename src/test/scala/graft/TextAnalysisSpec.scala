@@ -512,7 +512,6 @@ class TextAnalysisSpec extends AnyFunSuite {
   }
 
   test("q224 RM3: round 1 is exactly q193, expansion terms are non-query top-tf feedback terms") {
-    import spark.implicits._
     val sf = TestSpark.sf0001
     val rm3 = SparkEntry.queries("q224_rm3_expansion")(spark, sf)
       .collect().map(r => r.getLong(0) ->
