@@ -4,12 +4,20 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** Thin HTTP face over [[QueryService]] — the reference's 8 Flask
   * endpoints (app.py:144-308) on the JDK's built-in server (no new
   * dependencies; SURVEY §7.1 step 7). The icon-scraper enrichment is
   * external-web I/O and is represented by the pluggable `enrich` hook
   * with a no-op default (zero-egress environment).
+  *
+  * Requests are served concurrently on a fixed pool of daemon threads
+  * (`api-server-N`), one per core of the served frame's session
+  * (`defaultParallelism`): a request's planning, job launch and
+  * serialisation overlap other requests' Spark jobs, and the pool never
+  * asks the driver for more threads than it has cores.
   *
   * Routes (query semantics all live in QueryService; this layer only
   * parses params and serializes rows):
@@ -67,6 +75,16 @@ final class ApiServer(svc: QueryService, port: Int,
       }.toMap
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val pool = {
+    val n = new AtomicInteger
+    Executors.newFixedThreadPool(svc.session.sparkContext.defaultParallelism,
+      (r: Runnable) => {
+        val t = new Thread(r, s"api-server-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+  }
+  server.setExecutor(pool)
 
   private def handle(path: String)(fn: (HttpExchange, String) => Unit): Unit =
     server.createContext(path, (ex: HttpExchange) => {
@@ -127,6 +145,12 @@ final class ApiServer(svc: QueryService, port: Int,
   }
 
   def start(): Unit = server.start()
-  def stop(): Unit = server.stop(0)
+  /** Closes the socket, then waits (up to 10 s) for the requests already
+    * running on the pool to finish and its threads to exit. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+    pool.awaitTermination(10, TimeUnit.SECONDS)
+  }
   def boundPort: Int = server.getAddress.getPort
 }

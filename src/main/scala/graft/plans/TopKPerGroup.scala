@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode, Window}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.SparkStrategy
@@ -113,6 +113,11 @@ case class TopKPerGroupPartialExec(
   extends UnaryExecNode {
 
   override def output: Seq[Attribute] = child.output
+
+  // rows never move between partitions, so a child already clustered by
+  // the group keys needs no exchange above this node; no ordering is
+  // claimed, the heap drain does not keep one
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output

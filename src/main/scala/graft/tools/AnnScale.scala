@@ -74,12 +74,6 @@ object AnnScale {
     require(nBatches >= 2, "need a cold batch AND a warm curve")
     val spark = GraftSession("graft-ann-scale")
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-
     val base = java.nio.file.Files.createTempDirectory("graft-ann-scale")
     val idx = s"$base/ivf"
     // bootstrap contract: the coarse quantizer is fitted offline over

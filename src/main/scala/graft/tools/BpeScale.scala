@@ -25,11 +25,6 @@ object BpeScale {
     val spark = GraftSession("graft-bpe-scale")
     val docs = Tables.documents(spark, sfDir)
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
     // warm (JIT + page cache), then measure
     TrainingPrep.learnBpeHist(spark, docs, 5).foreach(_._2.unpersist())
     val ((m50, f50), t50) =

@@ -49,12 +49,6 @@ object IngestScale {
     require(nBatches >= 2, "need a cold batch AND a warm curve")
     val spark = GraftSession("graft-ingest-scale")
 
-    def timed[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime()
-      val a = f
-      (a, (System.nanoTime() - t0) / 1e9)
-    }
-
     val base = java.nio.file.Files.createTempDirectory("graft-ingest-scale")
     val lsh = s"$base/lsh"; val bm = s"$base/bm25"
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")

@@ -3,15 +3,18 @@ package graft
 import graft.apps.{ApiServer, AppSchema, QueryService, ServingData}
 import graft.pipeline.AppModels
 import graft.sources.CsvIngest
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end HTTP serving: the 8 reference endpoints over a trained
   * apps table, hit through real sockets. */
-class ApiServerSpec extends AnyFunSuite {
+class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
+  private var started = false
   private lazy val server: ApiServer = {
     import spark.implicits._
     val rng = new scala.util.Random(5)
@@ -28,47 +31,111 @@ class ApiServerSpec extends AnyFunSuite {
       AppSchema.servingCastMap).cache()
     val s = new ApiServer(new QueryService(served), 0) // ephemeral port
     s.start()
+    started = true
     s
   }
 
+  override def afterAll(): Unit = {
+    try if (started) server.stop() finally super.afterAll()
+  }
+
   private lazy val client = HttpClient.newHttpClient()
-  private def get(path: String): (Int, String) = {
-    val resp = client.send(
-      HttpRequest.newBuilder(URI.create(
-        s"http://localhost:${server.boundPort}$path")).GET().build(),
-      HttpResponse.BodyHandlers.ofString())
+  private def request(path: String, port: Int = server.boundPort) =
+    HttpRequest.newBuilder(URI.create(s"http://localhost:$port$path")).GET().build()
+  private def get(path: String, port: Int = server.boundPort): (Int, String) = {
+    val resp = client.send(request(path, port), HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), resp.body())
   }
 
+  /** Every route's valid request and every planted 4xx. */
+  private val paths = Seq("/check_data", "/categories",
+    "/search_app_suggestions?q=number%201", "/search_app_suggestions?q=x",
+    "/app_details_by_id/app.id.3", "/app_details_by_id/no.such",
+    "/recommend_apps_by_category/GAMES",
+    "/top_apps?sort_by=score&limit=5", "/top_apps?sort_by=nope",
+    "/recommend_similar_app_by_name/app%20number%207",
+    "/recommend_similar_app_by_name/zzz",
+    "/apps_in_cluster/0", "/apps_in_cluster/banana")
+
+  /** The live `api-server` threads. */
+  private def serverThreads: Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith("api-server-")).toSet
+
   test("all 8 endpoints answer with reference semantics") {
+    val (c1, b1) = get("/check_data")
+    assert(c1 == 200 && b1.contains("\"row_count\": 40"))
+
+    val (c2, b2) = get("/categories")
+    assert(c2 == 200 && b2.contains("Games") && b2.contains("Tools"))
+
+    val (c3, b3) = get("/search_app_suggestions?q=number%201")
+    assert(c3 == 200 && b3.toLowerCase.contains("number 1"))
+    assert(get("/search_app_suggestions?q=x")._1 == 400, "short query -> 400")
+
+    val (c4, b4) = get("/app_details_by_id/app.id.3")
+    assert(c4 == 200 && b4.contains("app.id.3"))
+    assert(get("/app_details_by_id/no.such")._1 == 404)
+
+    assert(get("/recommend_apps_by_category/GAMES")._1 == 200)
+
+    val (c5, b5) = get("/top_apps?sort_by=score&limit=5")
+    assert(c5 == 200 && b5.count(_ == '{') <= 5)
+    assert(get("/top_apps?sort_by=nope")._1 == 400)
+
+    val (c6, _) = get("/recommend_similar_app_by_name/app%20number%207")
+    assert(c6 == 200)
+    assert(get("/recommend_similar_app_by_name/zzz")._1 == 404)
+
+    assert(get("/apps_in_cluster/0")._1 == 200)
+    assert(get("/apps_in_cluster/banana")._1 == 400)
+  }
+
+  test("concurrent requests get the serial answers; memoised routes launch no job") {
+    val serial = paths.map(p => p -> get(p)).toMap
+    // every path 4x at once, on as many connections as the client opens
+    val fired = Seq.fill(4)(paths).flatten.map(p => p ->
+      client.sendAsync(request(p), HttpResponse.BodyHandlers.ofString()))
+    fired.foreach { case (p, f) =>
+      val resp = f.join()
+      assert((resp.statusCode(), resp.body()) == serial(p), s"$p answered differently under load")
+    }
+    // both whole-table routes were served above: from here on they are
+    // answered from memory
+    val sc = spark.sparkContext
+    val counters = new tools.Inspect.JobCounters(sc)
+    sc.addSparkListener(counters)
     try {
-      val (c1, b1) = get("/check_data")
-      assert(c1 == 200 && b1.contains("\"row_count\": 40"))
+      counters.drain(); counters.reset()
+      assert(get("/check_data") == serial("/check_data"))
+      assert(get("/categories") == serial("/categories"))
+      counters.drain()
+      assert(counters.read._1 == 0, "memoised routes must launch no Spark job")
+      // the counter does see a route that runs a query
+      get("/app_details_by_id/app.id.3")
+      counters.drain()
+      assert(counters.read._1 > 0)
+    } finally sc.removeSparkListener(counters)
+  }
 
-      val (c2, b2) = get("/categories")
-      assert(c2 == 200 && b2.contains("Games") && b2.contains("Tools"))
-
-      val (c3, b3) = get("/search_app_suggestions?q=number%201")
-      assert(c3 == 200 && b3.toLowerCase.contains("number 1"))
-      assert(get("/search_app_suggestions?q=x")._1 == 400, "short query -> 400")
-
-      val (c4, b4) = get("/app_details_by_id/app.id.3")
-      assert(c4 == 200 && b4.contains("app.id.3"))
-      assert(get("/app_details_by_id/no.such")._1 == 404)
-
-      assert(get("/recommend_apps_by_category/GAMES")._1 == 200)
-
-      val (c5, b5) = get("/top_apps?sort_by=score&limit=5")
-      assert(c5 == 200 && b5.count(_ == '{') <= 5)
-      assert(get("/top_apps?sort_by=nope")._1 == 400)
-
-      val (c6, _) = get("/recommend_similar_app_by_name/app%20number%207")
-      assert(c6 == 200)
-      assert(get("/recommend_similar_app_by_name/zzz")._1 == 404)
-
-      assert(get("/apps_in_cluster/0")._1 == 200)
-      assert(get("/apps_in_cluster/banana")._1 == 400)
-    } finally server.stop()
+  test("stop() ends every request thread, and a second server starts and stops") {
+    import spark.implicits._
+    val frame = Seq(("a.1", "One", "Tools"), ("a.2", "Two", "Games"))
+      .toDF("appId", "title", "genre")
+    def serveOnce(): Unit = {
+      val before = serverThreads
+      val s = new ApiServer(new QueryService(frame), 0)
+      s.start()
+      val (code, body) = get("/check_data", s.boundPort)
+      assert(code == 200 && body.contains("\"row_count\": 2"))
+      val mine = serverThreads -- before
+      assert(mine.nonEmpty, "the request must have run on an api-server thread")
+      s.stop()
+      mine.foreach(_.join(10000))
+      assert(mine.forall(!_.isAlive), s"left alive: ${mine.filter(_.isAlive).map(_.getName)}")
+    }
+    serveOnce()
+    serveOnce()
   }
 
   test("serving path picks the mtime-latest testdata-derived parquet, caches, serves") {

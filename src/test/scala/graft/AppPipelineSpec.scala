@@ -177,4 +177,23 @@ class AppPipelineSpec extends AnyFunSuite {
     val noCluster = new QueryService(served.drop("cluster"))
     assert(noCluster.appsInCluster(0).isEmpty)
   }
+
+  test("search suggestions are the true top 15 by (highest installs desc, appId)") {
+    import spark.implicits._
+    // 40 matching triples, each stored 1-3 times with different install
+    // counts (ties across triples too), shuffled over 4 partitions, next
+    // to non-matching rows that would outrank every one of them
+    val rng = new scala.util.Random(7)
+    val rows = (0 until 40).flatMap { i =>
+      Seq.fill(1 + i % 3)((s"Dup App $i", f"app.$i%02d", 3.5f, rng.nextInt(20) * 1000L))
+    } ++ (0 until 20).map(i => (s"Other $i", s"other.$i", 1.0f, 1000000L))
+    val frame = rng.shuffle(rows).toDF("title", "appId", "score", "minInstalls")
+      .repartition(4)
+    val want = rows.filter(_._1.toLowerCase.contains("dup"))
+      .groupBy(r => (r._1, r._2, r._3)).view.mapValues(_.map(_._4).max).toSeq
+      .sortBy { case ((_, id, _), n) => (-n, id) }.take(15).map(_._1)
+    val got = new QueryService(frame).searchSuggestions("dup").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getFloat(2))).toSeq
+    assert(got == want)
+  }
 }

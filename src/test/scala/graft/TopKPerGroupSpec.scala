@@ -84,6 +84,19 @@ class TopKPerGroupSpec extends AnyFunSuite {
       s"expected TopKPerGroup above Exchange above TopKPerGroupPartial:\n$plan")
   }
 
+  test("a child already clustered by the group key keeps its one exchange") {
+    val w = Window.partitionBy(col("o_custkey"))
+      .orderBy(desc("o_totalprice"), asc("o_orderkey"))
+    val df = Tables.orders(spark, sf).repartition(col("o_custkey"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= 3)
+    df.collect()
+    val plan = tools.Inspect.finalPlan(df)
+    assert(plan.contains("TopKPerGroupPartial "), s"partial missing:\n$plan")
+    assert("Exchange".r.findAllIn(plan).size == 1,
+      s"expected only the repartition's exchange:\n$plan")
+  }
+
   test("partial passthrough past the group cap still yields exact top-k") {
     // one input partition holding MORE distinct groups than the
     // row-budget cap (MaxPartialRows / k): the partial pass must stream
