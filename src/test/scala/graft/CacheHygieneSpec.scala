@@ -13,20 +13,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * OUTSIDE CacheScope.cached in a query body will fail here. */
 class CacheHygieneSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  private val sf = TestSpark.sf0001
 
   test("every registry query's scoped run leaves the CacheManager empty") {
-    // cold start so leaks are attributable to the query under test,
-    // not to frames another suite cached
-    spark.catalog.clearCache()
-    assert(spark.sharedState.cacheManager.isEmpty, "pre-state not clean")
-    for (q <- Registry.all.sortBy(_.name)) {
-      CacheScope.withScope {
-        q.run(spark, sf).count()
-      }
-      assert(spark.sharedState.cacheManager.isEmpty,
+    // each run starts from an empty cache, so a leak is attributable to
+    // the query under test, not to frames another suite cached
+    for (q <- Registry.all.sortBy(_.name))
+      assert(!RegistryRuns(q.name).leftCached,
         s"${q.name} left cached frames behind after its scope exited")
-    }
   }
 
   test("cached() without an active scope degrades to plain cache()") {

@@ -19,6 +19,13 @@ object TestSpark {
       // the default 100-char truncation cuts them off once attribute IDs
       // grow late in a long suite (order-dependent flake in round 5).
       .config("spark.sql.maxMetadataStringLength", "10000")
+      // The suite runs the same plans many times over (registry sweeps,
+      // fuzz walks re-probing after every step); the default 100-entry
+      // compiled-code cache evicts them between repeats, and about half
+      // of one registry pass's ~4400 generated-code compilations were
+      // repeats. Room for the whole suite's working set compiles each
+      // distinct class once.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
