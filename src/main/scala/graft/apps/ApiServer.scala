@@ -2,7 +2,7 @@ package graft.apps
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.DataFrame
-import java.net.InetSocketAddress
+import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -66,12 +66,15 @@ final class ApiServer(svc: QueryService, port: Int,
     try os.write(bytes) finally os.close()
   }
 
+  /** The query string's parameters: split while still encoded, so an
+    * encoded `&` or `=` stays inside its value, then each part decoded
+    * once. */
   private def queryParams(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).getOrElse("").split('&')
+    Option(ex.getRequestURI.getRawQuery).getOrElse("").split('&')
       .filter(_.contains('='))
       .map { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        k -> java.net.URLDecoder.decode(v, "UTF-8")
+        val Array(k, v) = kv.split("=", 2).map(URLDecoder.decode(_, StandardCharsets.UTF_8))
+        k -> v
       }.toMap
 
   private val server = HttpServer.create(new InetSocketAddress(port), 0)
@@ -89,8 +92,9 @@ final class ApiServer(svc: QueryService, port: Int,
   private def handle(path: String)(fn: (HttpExchange, String) => Unit): Unit =
     server.createContext(path, (ex: HttpExchange) => {
       try {
-        val rest = ex.getRequestURI.getPath.stripPrefix(path).stripPrefix("/")
-        fn(ex, java.net.URLDecoder.decode(rest, "UTF-8"))
+        // getPath is already decoded: a second decode would read `+` as
+        // a space and fail on a literal `%`
+        fn(ex, ex.getRequestURI.getPath.stripPrefix(path).stripPrefix("/"))
       } catch {
         case e: Exception =>
           respond(ex, 500, s"""{"error": ${jsonValue(e.getMessage)}}""")
@@ -145,12 +149,14 @@ final class ApiServer(svc: QueryService, port: Int,
   }
 
   def start(): Unit = server.start()
-  /** Closes the socket, then waits (up to 10 s) for the requests already
-    * running on the pool to finish and its threads to exit. */
+  /** Closes the socket, waits (up to 10 s) for the requests already
+    * running on the pool to finish and its threads to exit, then releases
+    * the query layer's cache. */
   def stop(): Unit = {
     server.stop(0)
     pool.shutdown()
     pool.awaitTermination(10, TimeUnit.SECONDS)
+    svc.close()
   }
   def boundPort: Int = server.getAddress.getPort
 }

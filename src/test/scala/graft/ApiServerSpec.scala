@@ -14,13 +14,16 @@ import scala.jdk.CollectionConverters._
 class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = TestSpark.spark
 
+  /** Titles whose URL encodings carry `+`, `%` and `&`. */
+  private val oddTitles = Map(37 -> "C++ Tutor", 38 -> "100% Free", 39 -> "R&B Radio")
+
   private var started = false
-  private lazy val server: ApiServer = {
+  private lazy val svc: QueryService = {
     import spark.implicits._
     val rng = new scala.util.Random(5)
     val genres = Seq("Tools", "Games", "Social")
     val apps = (0 until 40).map { i =>
-      (s"app.id.$i", s"App Number $i", genres(i % 3),
+      (s"app.id.$i", oddTitles.getOrElse(i, s"App Number $i"), genres(i % 3),
         f"${1.0 + rng.nextDouble() * 4}%.2f", (1000L * (i + 1)).toString,
         f"${rng.nextDouble() * 5}%.2f")
     }.toDF("appId", "title", "genre", "score", "minInstalls", "price")
@@ -29,7 +32,10 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       r.scored.select("appId", "title", "genre", "score", "minInstalls",
         "price", "cluster", "PredictedRating"),
       AppSchema.servingCastMap).cache()
-    val s = new ApiServer(new QueryService(served), 0) // ephemeral port
+    new QueryService(served)
+  }
+  private lazy val server: ApiServer = {
+    val s = new ApiServer(svc, 0) // ephemeral port
     s.start()
     started = true
     s
@@ -50,7 +56,8 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Every route's valid request and every planted 4xx. */
   private val paths = Seq("/check_data", "/categories",
     "/search_app_suggestions?q=number%201", "/search_app_suggestions?q=x",
-    "/app_details_by_id/app.id.3", "/app_details_by_id/no.such",
+    "/app_details_by_id/app.id.3", "/app_details_by_id/app.id.39",
+    "/app_details_by_id/no.such",
     "/recommend_apps_by_category/GAMES",
     "/top_apps?sort_by=score&limit=5", "/top_apps?sort_by=nope",
     "/recommend_similar_app_by_name/app%20number%207",
@@ -100,37 +107,77 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       val resp = f.join()
       assert((resp.statusCode(), resp.body()) == serial(p), s"$p answered differently under load")
     }
-    // both whole-table routes were served above: from here on they are
-    // answered from memory
+    // every route was served above, so every memo is built: from here on
+    // the whole-table and per-key routes are answered from memory, and
+    // the rest run one job each
     val sc = spark.sparkContext
     val counters = new tools.Inspect.JobCounters(sc)
     sc.addSparkListener(counters)
-    try {
+    def jobsOf(p: String): Long = {
       counters.drain(); counters.reset()
-      assert(get("/check_data") == serial("/check_data"))
-      assert(get("/categories") == serial("/categories"))
+      assert(get(p) == serial(p), s"$p answered differently after its memo was built")
       counters.drain()
-      assert(counters.read._1 == 0, "memoised routes must launch no Spark job")
-      // the counter does see a route that runs a query
-      get("/app_details_by_id/app.id.3")
-      counters.drain()
-      assert(counters.read._1 > 0)
+      counters.read._1
+    }
+    try {
+      for (p <- Seq("/check_data", "/categories",
+          "/recommend_apps_by_category/GAMES", "/apps_in_cluster/0"))
+        assert(jobsOf(p) == 0, s"$p is memoised and must launch no Spark job")
+      // app.id.39 is the fixture's last row, outside the first partition
+      for (p <- Seq("/search_app_suggestions?q=number%201",
+          "/app_details_by_id/app.id.39", "/app_details_by_id/no.such",
+          "/recommend_similar_app_by_name/app%20number%207"))
+        assert(jobsOf(p) == 1, s"$p must launch exactly one Spark job")
     } finally sc.removeSparkListener(counters)
+    // search scans the cached aggregate without a shuffle; the plan text
+    // below the InMemoryRelation line is the cache's own build plan
+    val search = tools.Inspect.finalPlan(svc.searchSuggestions("number 1"))
+    assert(search.contains("InMemoryTableScan") &&
+      !search.split("InMemoryRelation")(0).contains("Exchange"), search)
+    // the rankings behind the per-key memos keep the top-k operator
+    for (r <- Seq(svc.categoryRanking, svc.clusterRanking)) {
+      val plan = tools.Inspect.finalPlan(r)
+      assert(plan.contains("TopKPerGroup "), s"ranking is not planned as TopKPerGroupExec:\n$plan")
+    }
+  }
+
+  test("path arguments and query values holding +, % and & are decoded once") {
+    for ((title, path) <- Seq("C++ Tutor" -> "C%2B%2B%20Tutor",
+        "100% Free" -> "100%25%20Free", "R&B Radio" -> "R%26B%20Radio")) {
+      val (code, body) = get(s"/recommend_similar_app_by_name/$path")
+      assert(code == 200, s"$title: $body")
+    }
+    for ((q, title) <- Seq("c%2B%2B" -> "C++ Tutor", "100%25" -> "100% Free",
+        "r%26b" -> "R&B Radio", "number+7" -> "App Number 7")) {
+      val (code, body) = get(s"/search_app_suggestions?q=$q")
+      assert(code == 200 && body.contains(s"\"$title\""), s"q=$q: $body")
+    }
+    // `+` is literal in a path, a space only in a query value
+    assert(get("/recommend_similar_app_by_name/App+Number+7")._1 == 404)
   }
 
   test("stop() ends every request thread, and a second server starts and stops") {
     import spark.implicits._
-    val frame = Seq(("a.1", "One", "Tools"), ("a.2", "Two", "Games"))
-      .toDF("appId", "title", "genre")
+    import org.apache.spark.sql.functions.max
+    val frame = Seq(("a.1", "One", "Tools", 4.0f, 10L), ("a.2", "Two", "Games", 3.0f, 20L))
+      .toDF("appId", "title", "genre", "score", "minInstalls")
+    // the search aggregate's plan: its storage level is the cache
+    // manager's entry for that plan, whoever cached it
+    val triples = frame.groupBy("title", "appId", "score")
+      .agg(max("minInstalls").as("maxInstalls"))
+    def cached = triples.storageLevel.useMemory
     def serveOnce(): Unit = {
       val before = serverThreads
       val s = new ApiServer(new QueryService(frame), 0)
       s.start()
       val (code, body) = get("/check_data", s.boundPort)
       assert(code == 200 && body.contains("\"row_count\": 2"))
+      assert(get("/search_app_suggestions?q=tw", s.boundPort)._2.contains("a.2"))
+      assert(cached, "a search caches the aggregate it filters")
       val mine = serverThreads -- before
       assert(mine.nonEmpty, "the request must have run on an api-server thread")
       s.stop()
+      assert(!cached, "stop() must release the search aggregate")
       mine.foreach(_.join(10000))
       assert(mine.forall(!_.isAlive), s"left alive: ${mine.filter(_.isAlive).map(_.getName)}")
     }

@@ -6,6 +6,7 @@ import graft.sources.CsvIngest
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** End-to-end reference parity: CSV ingest → drift union → cast →
   * train (K-Means + RF) → API projection → the 8 serving queries. */
@@ -136,14 +137,33 @@ class AppPipelineSpec extends AnyFunSuite {
     assert(a == b, "reloaded model must reproduce cluster assignments")
   }
 
-  test("the 8 serving queries behave like app.py") {
+  /** The trained fixture saved and read back as the API serves it. */
+  private lazy val served: DataFrame = {
     val r = AppModels.train(apps).toOption.get
     val tmp = Files.createTempDirectory("graft-api").toFile
     tmp.deleteOnExit()
     val path = s"${tmp.getAbsolutePath}/api_app_info_test"
     AppModels.saveApiData(r.scored, path)
-    val served = CsvIngest.castColumns(
-      spark.read.parquet(path).cache(), AppSchema.servingCastMap)
+    CsvIngest.castColumns(spark.read.parquet(path).cache(), AppSchema.servingCastMap)
+  }
+
+  /** 40 matching (title, appId, score) triples, each stored 1-3 times with
+    * different install counts (ties across triples too), shuffled over 4
+    * partitions, next to non-matching rows that would outrank every one
+    * of them. */
+  private lazy val dupTriples = {
+    val rng = new scala.util.Random(7)
+    (0 until 40).flatMap { i =>
+      Seq.fill(1 + i % 3)((s"Dup App $i", f"app.$i%02d", 3.5f, rng.nextInt(20) * 1000L))
+    } ++ (0 until 20).map(i => (s"Other $i", s"other.$i", 1.0f, 1000000L))
+  }
+  private lazy val dupTripleFrame: DataFrame = {
+    import spark.implicits._
+    new scala.util.Random(7).shuffle(dupTriples)
+      .toDF("title", "appId", "score", "minInstalls").repartition(4)
+  }
+
+  test("the 8 serving queries behave like app.py") {
     val svc = new QueryService(served)
 
     val (n, cols, sample) = svc.checkData
@@ -176,24 +196,90 @@ class AppPipelineSpec extends AnyFunSuite {
     assert(svc.appsInCluster(0).isDefined)
     val noCluster = new QueryService(served.drop("cluster"))
     assert(noCluster.appsInCluster(0).isEmpty)
+    svc.close()
   }
 
   test("search suggestions are the true top 15 by (highest installs desc, appId)") {
-    import spark.implicits._
-    // 40 matching triples, each stored 1-3 times with different install
-    // counts (ties across triples too), shuffled over 4 partitions, next
-    // to non-matching rows that would outrank every one of them
-    val rng = new scala.util.Random(7)
-    val rows = (0 until 40).flatMap { i =>
-      Seq.fill(1 + i % 3)((s"Dup App $i", f"app.$i%02d", 3.5f, rng.nextInt(20) * 1000L))
-    } ++ (0 until 20).map(i => (s"Other $i", s"other.$i", 1.0f, 1000000L))
-    val frame = rng.shuffle(rows).toDF("title", "appId", "score", "minInstalls")
-      .repartition(4)
-    val want = rows.filter(_._1.toLowerCase.contains("dup"))
+    val want = dupTriples.filter(_._1.toLowerCase.contains("dup"))
       .groupBy(r => (r._1, r._2, r._3)).view.mapValues(_.map(_._4).max).toSeq
       .sortBy { case ((_, id, _), n) => (-n, id) }.take(15).map(_._1)
-    val got = new QueryService(frame).searchSuggestions("dup").collect()
+    val svc = new QueryService(dupTripleFrame)
+    val got = svc.searchSuggestions("dup").collect()
       .map(r => (r.getString(0), r.getString(1), r.getFloat(2))).toSeq
+    svc.close()
     assert(got == want)
+  }
+
+  test("memoised answers equal the declarative queries they replace") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val byScore = Seq(desc("score"), asc("appId"))
+    // planted next to the trained rows: two rows with a null genre, and
+    // one app stored 12 times at the top of the largest cluster, so its
+    // own id fills more than 10 of that cluster's top 20 and the similar
+    // route must fall back to the full query
+    val big = served.groupBy("cluster").count().filter(col("cluster").isNotNull)
+      .orderBy(desc("count"), asc("cluster")).head().getInt(0)
+    val template = served.filter(col("cluster") === big).head()
+    def copy(changes: (String, Any)*): Row = Row.fromSeq(changes.foldLeft(template.toSeq) {
+      case (row, (c, v)) => row.updated(served.schema.fieldIndex(c), v) })
+    val planted = Seq(1, 2).map(i =>
+        copy("appId" -> s"planted.null.$i", "title" -> s"Planted Null $i", "genre" -> null)) ++
+      Seq.fill(12)(copy("appId" -> "planted.dup", "title" -> "Planted Dup", "score" -> 9.5f))
+    val frame = served.union(spark.createDataFrame(planted.asJava, served.schema)).cache()
+    val svc = new QueryService(frame)
+    def same(what: String, got: Seq[Row], want: Seq[Row]): Unit =
+      assert(got == want, s"$what: memoised $got, declarative $want")
+    try {
+      assert(frame.filter(col("cluster") === big).count() > QueryService.RankDepth,
+        "the fallback needs a cluster larger than a ranking")
+      val genres = frame.select("genre").distinct().collect().map(_.getString(0)).toSeq
+      assert(genres.contains(null))
+      def mixed(g: String) = g.zipWithIndex.map { case (ch, i) =>
+        if (i % 2 == 0) ch.toUpper else ch.toLower }.mkString
+      for (g <- genres.filter(_ != null).flatMap(g => Seq(g, mixed(g))) :+ "NoSuchGenre")
+        same(s"category $g", svc.recommendByCategory(g).collect().toSeq,
+          frame.filter(lower(col("genre")) === g.toLowerCase)
+            .orderBy(desc("score"), desc("minInstalls"), asc("appId")).limit(20).collect().toSeq)
+      val clusters = frame.select("cluster").distinct().collect()
+        .filterNot(_.isNullAt(0)).map(_.getInt(0)).toSeq
+      for (c <- clusters :+ 99 :+ -1)
+        same(s"cluster $c", svc.appsInCluster(c).get.collect().toSeq,
+          frame.filter(col("cluster") === c).orderBy(byScore: _*).limit(20).collect().toSeq)
+      // the similar route's declarative answer for every title in one
+      // job: each title's lookup row is its first in partition order
+      // (what the route's `limit(1)` lookup returned), and its answer the
+      // top 10 of that row's cluster without that row's id
+      val selves = frame.select("title", "appId", "cluster").collect()
+        .groupBy(_.getString(0).toLowerCase).view.mapValues(_.head).toMap
+      assert(selves.contains("planted dup"))
+      val want = frame.join(broadcast(selves.values.toSeq.filterNot(_.isNullAt(2))
+          .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
+          .toDF("self_title", "self_id", "self_cluster")),
+          col("cluster") === col("self_cluster") && col("appId") =!= col("self_id"))
+        .withColumn("rk", row_number().over(Window.partitionBy("self_title").orderBy(byScore: _*)))
+        .filter(col("rk") <= 10)
+        .collect().groupBy(_.getAs[String]("self_title"))
+        .view.mapValues(_.sortBy(_.getAs[Int]("rk")).map(r => Row.fromSeq(r.toSeq.take(frame.columns.length))).toSeq)
+        .toMap
+      for ((t, self) <- selves) {
+        val got = svc.similarAppsByName(t)
+        assert(got.isDefined == !self.isNullAt(2), s"similar $t: 404 differs")
+        got.foreach(g => same(s"similar $t", g.collect().toSeq, want.getOrElse(self.getString(0), Nil)))
+        if (t == "planted dup")
+          assert(tools.Inspect.finalPlan(got.get).startsWith("TakeOrderedAndProject"),
+            "a ranking prefix filled by the app's own id must fall back to the query")
+      }
+    } finally { svc.close(); frame.unpersist() }
+    val dups = new QueryService(dupTripleFrame)
+    try for (q <- Seq("dup", "DUP APP 1", "app 3", "other", "zz"))
+      same(s"search $q", dups.searchSuggestions(q).collect().toSeq,
+        dupTripleFrame.filter(lower(col("title")).contains(q.toLowerCase))
+          .groupBy("title", "appId", "score").agg(max("minInstalls").as("maxInstalls"))
+          .orderBy(desc("maxInstalls"), asc("appId")).limit(15).select("title", "appId", "score")
+          .collect().toSeq)
+    finally dups.close()
   }
 }
