@@ -3,6 +3,8 @@ package graft.apps
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 /** The reference's 8 serving endpoints (app.py:144-308) as pure
@@ -15,49 +17,48 @@ import scala.jdk.CollectionConverters._
   * One deliberate upgrade, documented in SURVEY §5.2: the reference's
   * top-k sorts are non-deterministic under ties; every sort here appends
   * `appId` as a final tie-break key so results are stable across runs
-  * and partitionings. The per-key answers are top-k rankings or point
-  * lookups — no full sorts.
+  * and partitionings.
   *
-  * The frame is immutable, so every answer that depends only on it is
-  * computed once, on first use, and served from memory afterwards:
-  *   - /check_data and /categories are local frames: 0 Spark jobs.
-  *   - /recommend_apps_by_category and /apps_in_cluster are lookups in
-  *     per-key rankings — the top [[QueryService.RankDepth]] rows of each
-  *     `lower(genre)` and each `cluster`, each ranking built by one
-  *     `row_number() <= 20` window job (planned as TopKPerGroupExec) and
-  *     collected. Both routes answer with the top 20, so a key's ranking
-  *     IS its answer: 0 Spark jobs. The memo holds at most 20 rows per
-  *     distinct key (tens of genres, k clusters).
-  *   - /recommend_similar_app_by_name runs 1 job, the title lookup; the
-  *     answer is the first 10 rows of the cluster's top 20 that are not
-  *     the app itself. Dropping rows from a ranked prefix keeps its order,
-  *     so that is exact whenever 10 rows survive or the prefix is the
-  *     whole cluster; otherwise (the app's own id fills more than 10 of a
-  *     full prefix) the route runs the declarative query instead.
-  *   - /search_app_suggestions runs 1 single-stage job over a cached
-  *     (title, appId, score, max(minInstalls)) aggregate: filtering on
-  *     `title` commutes with a group-by that includes `title`, so the
-  *     per-request filter over the aggregate equals the aggregate over
-  *     the filter, without an exchange. [[close]] releases that cache.
-  *   - /app_details_by_id runs 1 job; /top_apps stays a per-request
-  *     top-k (its sort column and limit are request parameters).
+  * The frame is immutable, so every answer is computed from data built
+  * once, on the route's first use, and served from the JVM's heap
+  * afterwards; each answer is a frame over a local relation, whose
+  * collect starts no Spark job. The session is `local[n]`, so these
+  * copies live in the JVM that already caches the frame.
+  *
+  * | route | built once | per request (0 jobs) |
+  * |---|---|---|
+  * | /check_data, /categories | the answer | — |
+  * | /recommend_apps_by_category | top [[QueryService.RankDepth]] per `lower(genre)` by (score, minInstalls) | lookup |
+  * | /apps_in_cluster | top 20 per `cluster` by score | lookup |
+  * | /top_apps | per `sort_by` column: the top 20 overall and per `lower(genre)` | prefix of `limit` rows |
+  * | /app_details_by_id | `appId` → first row in partition order | lookup |
+  * | /recommend_similar_app_by_name | `lower(title)` → first row, plus the cluster ranking | lookup, then the cluster's top 20 without the app |
+  * | /search_app_suggestions | every (title, appId, score) with its highest minInstalls, ranked | first 15 whose `lower(title)` contains `q` |
+  *
+  * The maps hold at most 20 rows per genre, cluster and (sort column,
+  * genre) pair, plus one entry per served app for the id and title maps
+  * and the search ranking. Two requests fall back to the declarative
+  * query, one job each: /top_apps with a `limit` outside
+  * [0, [[QueryService.RankDepth]]], and /recommend_similar_app_by_name
+  * when the app's own id fills more than 10 rows of its cluster's full
+  * top 20.
   */
 final class QueryService(df: DataFrame) {
   import QueryService._
 
   private val suggestionCols = Seq("title", "appId", "score")
+  private lazy val suggestionSchema = StructType(suggestionCols.map(df.schema(_)))
   private def tieBreak(keys: Column*): Seq[Column] = keys :+ asc("appId")
 
   /** The served frame's session. */
   def session: SparkSession = df.sparkSession
 
-  /** `rows` as a frame of the served schema over a local relation. */
-  private def local(rows: Seq[Row]): DataFrame =
-    session.createDataFrame(rows.asJava, df.schema)
+  /** `rows` as a frame of `schema` over a local relation. */
+  private def local(rows: Seq[Row], schema: StructType = df.schema): DataFrame =
+    session.createDataFrame(rows.asJava, schema)
 
   /** `q`'s rows, collected once into a frame over a local relation. */
-  private def local(q: DataFrame): DataFrame =
-    session.createDataFrame(q.collect().toSeq.asJava, q.schema)
+  private def local(q: DataFrame): DataFrame = local(q.collect().toSeq, q.schema)
 
   private lazy val empty = local(Seq.empty[Row])
 
@@ -72,37 +73,47 @@ final class QueryService(df: DataFrame) {
     local(df.select("genre").filter(col("genre").isNotNull)
       .distinct().orderBy("genre"))
 
-  @volatile private var triplesCached = false
-  /** Every distinct (title, appId, score) with its highest minInstalls,
-    * cached on first use. */
-  private lazy val triples: DataFrame = {
-    val t = df.groupBy(suggestionCols.map(col): _*)
-      .agg(max("minInstalls").as("maxInstalls")).cache()
-    triplesCached = true
-    t
-  }
+  /** Every distinct (title, appId, score) and Spark's `lower(title)`,
+    * ranked by the triple's highest minInstalls descending, then appId,
+    * title and score: a total order, since the triples are distinct. */
+  private lazy val suggestions: Array[(Row, String)] =
+    df.groupBy(suggestionCols.map(col): _*)
+      .agg(max("minInstalls").as("maxInstalls"))
+      .orderBy(desc("maxInstalls"), asc("appId"), asc("title"), asc("score"))
+      .select(suggestionCols.map(col) :+ lower(col("title")): _*)
+      .collect().map(r => (Row.fromSeq(r.toSeq.take(suggestionCols.size)), r.getString(3)))
 
   /** GET /search_app_suggestions?q= — the 15 distinct (title, appId,
     * score) triples whose title contains `q`, ranked by the triple's
-    * highest minInstalls descending, then appId (app.py:164-182); caller
-    * enforces q.length >= 2 like app.py:169. The triples are deduplicated
-    * BEFORE the sort: a sort under a distinct is dropped by the optimizer,
-    * which would return 15 arbitrary matches. */
+    * highest minInstalls descending, then appId, title and score
+    * (app.py:164-182); caller enforces q.length >= 2 like app.py:169.
+    * The triples are deduplicated BEFORE the ranking: a sort under a
+    * distinct is dropped by the optimizer, which would return 15
+    * arbitrary matches. */
   def searchSuggestions(q: String): DataFrame = {
     require(q.length >= 2, "query must be at least 2 characters")
-    triples.filter(lower(col("title")).contains(q.toLowerCase))
-      .orderBy(tieBreak(desc("maxInstalls")): _*)
-      .limit(15)
-      .select(suggestionCols.map(col): _*)
+    val needle = q.toLowerCase
+    local(suggestions.iterator.collect { case (r, t) if t != null && t.contains(needle) => r }
+      .take(15).toSeq, suggestionSchema)
+  }
+
+  /** The served rows by `appId` and by Spark's `lower(title)`, each key
+    * mapped to its first row in partition order: one collect. */
+  private lazy val lookups: Lookups = {
+    val n = df.columns.length
+    val id = df.schema.fieldIndex("appId")
+    val rows = df.select(col("*"), lower(col("title"))).collect()
+      .map(r => (Row.fromSeq(r.toSeq.take(n)), r.getString(n)))
+    def firsts(key: ((Row, String)) => String): Map[String, Row] =
+      // reversed, so a key's first row is the one the map keeps
+      rows.reverseIterator.filterNot(key(_) == null).map(r => key(r) -> r._1).toMap
+    Lookups(firsts(_._1.getString(id)), firsts(_._2))
   }
 
   /** GET /app_details_by_id/<id> — point lookup (app.py:184-204): the
-    * first match in partition order. One partition, so the limit's
-    * collect is one single-task job that stops at the first match; over
-    * the frame's own partitions it starts a second job whenever the
-    * match is not in the first. */
+    * first match in partition order. */
   def appDetailsById(appId: String): DataFrame =
-    df.filter(col("appId") === appId).coalesce(1).limit(1)
+    lookups.byId.get(appId).fold(empty)(r => local(Seq(r)))
 
   /** The top [[RankDepth]] rows of every non-null `key` by `order` (then
     * appId): the served columns, then the key, then the rank. One
@@ -114,19 +125,34 @@ final class QueryService(df: DataFrame) {
       .filter(col(RankCol) <= RankDepth)
 
   /** [[ranking]]'s rows grouped by key, each key's rows best first. */
-  private def collectRanking(r: DataFrame): Map[Any, Ranked] = {
+  private def collectRanking(r: DataFrame): Map[Any, Seq[Row]] = {
     val n = df.columns.length
     r.collect().groupBy(_.get(n)).map { case (k, rows) =>
-      val ranked = rows.sortBy(_.getInt(n + 1)).map(x => Row.fromSeq(x.toSeq.take(n))).toSeq
-      k -> Ranked(ranked, local(ranked))
+      k -> rows.sortBy(_.getInt(n + 1)).map(x => Row.fromSeq(x.toSeq.take(n))).toSeq
     }
   }
+  private def memoRanking(r: DataFrame): Map[Any, Ranked] =
+    collectRanking(r).map { case (k, rows) => k -> Ranked(rows, local(rows)) }
 
   private[graft] def categoryRanking: DataFrame =
     ranking(lower(col("genre")), desc("score"), desc("minInstalls"))
   private[graft] def clusterRanking: DataFrame = ranking(col("cluster"), desc("score"))
-  private lazy val byCategory = collectRanking(categoryRanking)
-  private lazy val byCluster = collectRanking(clusterRanking)
+  private lazy val byCategory = memoRanking(categoryRanking)
+  private lazy val byCluster = memoRanking(clusterRanking)
+
+  /** One sort column's top [[RankDepth]] rows by (column desc, appId),
+    * overall and per `lower(genre)`, each collected on first use. */
+  private final class TopRanking(sortBy: String) {
+    lazy val overall: Seq[Row] = topQuery(df, sortBy, RankDepth).collect().toSeq
+    lazy val byGenre: Map[Any, Seq[Row]] =
+      collectRanking(ranking(lower(col("genre")), desc(sortBy)))
+  }
+  /** Built once per sort column: the map only creates the holder, whose
+    * lazy vals build outside the map's lock. */
+  private val topRankings = new ConcurrentHashMap[String, TopRanking]
+
+  private def topQuery(base: DataFrame, sortBy: String, limit: Int): DataFrame =
+    base.orderBy(tieBreak(desc(sortBy)): _*).limit(limit)
 
   /** GET /recommend_apps_by_category/<c> — case-insensitive genre filter,
     * top-20 by (score, minInstalls) (app.py:206-225); a lookup in the
@@ -135,39 +161,40 @@ final class QueryService(df: DataFrame) {
     byCategory.get(category.toLowerCase).fold(empty)(_.frame)
 
   /** GET /top_apps?sort_by&limit&category — dynamic validated sort column
-    * (app.py:227-258). Returns None when sort_by is not a column, the
-    * 400-equivalent of app.py:238-239. */
+    * (app.py:227-258); a prefix of the column's ranking, or the
+    * declarative top-k for a `limit` outside [0, [[RankDepth]]]. Returns
+    * None when sort_by is not a column, the 400-equivalent of
+    * app.py:238-239. */
   def topApps(sortBy: String, limit: Int = 10,
-      category: Option[String] = None): Option[DataFrame] = {
+      category: Option[String] = None): Option[DataFrame] =
     if (!df.columns.contains(sortBy)) None
+    else if (limit < 0 || limit > RankDepth) Some(topQuery(
+      category.fold(df)(c => df.filter(lower(col("genre")) === c.toLowerCase)), sortBy, limit))
     else {
-      val base = category match {
-        case Some(c) => df.filter(lower(col("genre")) === c.toLowerCase)
-        case None => df
-      }
-      Some(base.orderBy(tieBreak(desc(sortBy)): _*).limit(limit))
+      val r = topRankings.computeIfAbsent(sortBy, new TopRanking(_))
+      val top = category.fold(r.overall)(c => r.byGenre.getOrElse(c.toLowerCase, Nil))
+      Some(local(top.take(limit)))
     }
-  }
 
   /** GET /recommend_similar_app_by_name/<name> — the core recommender:
     * cluster-membership similarity (app.py:260-292), the cluster's top 10
     * by score without the app itself. Returns None when the app is
     * unknown or has a null cluster (the 404 paths). */
-  def similarAppsByName(name: String): Option[DataFrame] =
-    df.filter(lower(col("title")) === name.toLowerCase)
-      .select("appId", "cluster").collect().headOption
-      .filterNot(_.isNullAt(1)).map { self =>
-        val (selfId, clusterId) = (self.get(0), self.get(1))
-        val id = df.schema.fieldIndex("appId")
-        // the null semantics of `appId =!= selfId`
-        def other(r: Row) = selfId != null && !r.isNullAt(id) && r.get(id) != selfId
-        val top = byCluster.get(clusterId).fold(Seq.empty[Row])(_.rows)
-        val others = top.filter(other)
-        if (others.size >= 10 || top.size < RankDepth) local(others.take(10))
-        else df.filter(col("cluster") === clusterId && col("appId") =!= selfId)
-          .orderBy(tieBreak(desc("score")): _*)
-          .limit(10)
-      }
+  def similarAppsByName(name: String): Option[DataFrame] = {
+    val cluster = df.schema.fieldIndex("cluster")
+    lookups.byTitle.get(name.toLowerCase).filterNot(_.isNullAt(cluster)).map { self =>
+      val id = df.schema.fieldIndex("appId")
+      val (selfId, clusterId) = (self.get(id), self.get(cluster))
+      // the null semantics of `appId =!= selfId`
+      def other(r: Row) = selfId != null && !r.isNullAt(id) && r.get(id) != selfId
+      val top = byCluster.get(clusterId).fold(Seq.empty[Row])(_.rows)
+      val others = top.filter(other)
+      if (others.size >= 10 || top.size < RankDepth) local(others.take(10))
+      else df.filter(col("cluster") === clusterId && col("appId") =!= selfId)
+        .orderBy(tieBreak(desc("score")): _*)
+        .limit(10)
+    }
+  }
 
   /** GET /apps_in_cluster/<id> — top-20 by score (app.py:294-308), a
     * lookup in the cluster ranking; None if the frame has no cluster
@@ -175,9 +202,6 @@ final class QueryService(df: DataFrame) {
   def appsInCluster(clusterId: Int): Option[DataFrame] =
     if (!df.columns.contains("cluster")) None
     else Some(byCluster.get(clusterId).fold(empty)(_.frame))
-
-  /** Releases the cached search aggregate, if a search built it. */
-  def close(): Unit = if (triplesCached) triples.unpersist()
 }
 
 object QueryService {
@@ -189,4 +213,7 @@ object QueryService {
 
   /** One key's ranked rows, best first, and the same rows as a frame. */
   private final case class Ranked(rows: Seq[Row], frame: DataFrame)
+
+  /** The served rows by appId and by Spark's `lower(title)`. */
+  private final case class Lookups(byId: Map[String, Row], byTitle: Map[String, Row])
 }

@@ -53,16 +53,24 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     (resp.statusCode(), resp.body())
   }
 
+  /** A limit past the rankings: the one request that runs a query. */
+  private val deepTop = s"/top_apps?sort_by=score&limit=${QueryService.RankDepth + 1}"
+
   /** Every route's valid request and every planted 4xx. */
   private val paths = Seq("/check_data", "/categories",
     "/search_app_suggestions?q=number%201", "/search_app_suggestions?q=x",
     "/app_details_by_id/app.id.3", "/app_details_by_id/app.id.39",
     "/app_details_by_id/no.such",
     "/recommend_apps_by_category/GAMES",
-    "/top_apps?sort_by=score&limit=5", "/top_apps?sort_by=nope",
+    "/top_apps?sort_by=score&limit=5", "/top_apps?sort_by=price&limit=3&category=games",
+    deepTop, "/top_apps?sort_by=nope", "/top_apps?limit=abc",
     "/recommend_similar_app_by_name/app%20number%207",
     "/recommend_similar_app_by_name/zzz",
     "/apps_in_cluster/0", "/apps_in_cluster/banana")
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** The route a path is served by: its first segment. */
+  private def route(path: String) = "/" + path.split("[/?]")(1)
 
   /** The live `api-server` threads. */
   private def serverThreads: Set[Thread] =
@@ -100,6 +108,7 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("concurrent requests get the serial answers; memoised routes launch no job") {
     val serial = paths.map(p => p -> get(p)).toMap
+    val before = json.readTree(get("/metrics")._2)
     // every path 4x at once, on as many connections as the client opens
     val fired = Seq.fill(4)(paths).flatten.map(p => p ->
       client.sendAsync(request(p), HttpResponse.BodyHandlers.ofString()))
@@ -107,9 +116,18 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       val resp = f.join()
       assert((resp.statusCode(), resp.body()) == serial(p), s"$p answered differently under load")
     }
+    // the metrics moved by exactly what was fired, per route
+    val after = json.readTree(get("/metrics")._2)
+    for ((r, ps) <- fired.map(_._1).groupBy(route)) {
+      def moved(k: String) = after.get(r).get(k).asLong - before.get(r).get(k).asLong
+      assert(moved("requests") == ps.size, s"$r requests")
+      assert(moved("4xx") == ps.count(p => serial(p)._1 / 100 == 4), s"$r 4xx")
+      assert(moved("5xx") == 0, s"$r 5xx")
+      val (p50, p99) = (after.get(r).get("p50_ms").asDouble, after.get(r).get("p99_ms").asDouble)
+      assert(p50 > 0 && p99 >= p50, s"$r latency: ${after.get(r)}")
+    }
     // every route was served above, so every memo is built: from here on
-    // the whole-table and per-key routes are answered from memory, and
-    // the rest run one job each
+    // every answer comes from memory, except a limit past the rankings
     val sc = spark.sparkContext
     val counters = new tools.Inspect.JobCounters(sc)
     sc.addSparkListener(counters)
@@ -119,26 +137,47 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       counters.drain()
       counters.read._1
     }
-    try {
-      for (p <- Seq("/check_data", "/categories",
-          "/recommend_apps_by_category/GAMES", "/apps_in_cluster/0"))
-        assert(jobsOf(p) == 0, s"$p is memoised and must launch no Spark job")
-      // app.id.39 is the fixture's last row, outside the first partition
-      for (p <- Seq("/search_app_suggestions?q=number%201",
-          "/app_details_by_id/app.id.39", "/app_details_by_id/no.such",
-          "/recommend_similar_app_by_name/app%20number%207"))
-        assert(jobsOf(p) == 1, s"$p must launch exactly one Spark job")
-    } finally sc.removeSparkListener(counters)
-    // search scans the cached aggregate without a shuffle; the plan text
-    // below the InMemoryRelation line is the cache's own build plan
-    val search = tools.Inspect.finalPlan(svc.searchSuggestions("number 1"))
-    assert(search.contains("InMemoryTableScan") &&
-      !search.split("InMemoryRelation")(0).contains("Exchange"), search)
+    try for (p <- paths)
+      assert(jobsOf(p) == (if (p == deepTop) 1 else 0), s"$p: Spark jobs")
+    finally sc.removeSparkListener(counters)
     // the rankings behind the per-key memos keep the top-k operator
     for (r <- Seq(svc.categoryRanking, svc.clusterRanking)) {
       val plan = tools.Inspect.finalPlan(r)
       assert(plan.contains("TopKPerGroup "), s"ranking is not planned as TopKPerGroupExec:\n$plan")
     }
+  }
+
+  test("top_apps answers 400 to a limit that is not a non-negative integer") {
+    for (limit <- Seq("abc", "-1", "1.5", "", "99999999999"))
+      assert(get(s"/top_apps?sort_by=score&limit=$limit") == (400, """{"error": "invalid limit"}"""),
+        s"limit=$limit")
+    assert(get("/top_apps?sort_by=score&limit=0") == (200, "[]"))
+  }
+
+  test("back-to-back requests on one kept-alive connection do not wait for delayed ACKs") {
+    val sock = new java.net.Socket("localhost", server.boundPort)
+    try {
+      val out = sock.getOutputStream
+      val in = new java.io.DataInputStream(new java.io.BufferedInputStream(sock.getInputStream))
+      val req = "GET /check_data HTTP/1.1\r\nHost: localhost\r\n\r\n".getBytes("US-ASCII")
+      /** One whole reply: the headers up to the blank line, then the body. */
+      def reply(): Unit = {
+        val head = new StringBuilder
+        while (!head.endsWith("\r\n\r\n")) head += in.readByte().toChar
+        val length = head.toString.split("\r\n")
+          .collectFirst { case h if h.toLowerCase.startsWith("content-length:") => h.drop(15).trim.toInt }
+        assert(head.startsWith("HTTP/1.1 200") && length.isDefined, head.toString)
+        in.readFully(new Array[Byte](length.get))
+      }
+      val ms = (0 until 20).map { _ =>
+        val t0 = System.nanoTime()
+        out.write(req); out.flush()
+        reply()
+        (System.nanoTime() - t0) / 1e6
+      }.sorted
+      // a reply held back by Nagle's algorithm waits >= 40 ms for the ACK
+      assert(ms(ms.size / 2) < 20, s"round trips (ms): $ms")
+    } finally sock.close()
   }
 
   test("path arguments and query values holding +, % and & are decoded once") {
@@ -158,26 +197,27 @@ class ApiServerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stop() ends every request thread, and a second server starts and stops") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.max
-    val frame = Seq(("a.1", "One", "Tools", 4.0f, 10L), ("a.2", "Two", "Games", 3.0f, 20L))
-      .toDF("appId", "title", "genre", "score", "minInstalls")
-    // the search aggregate's plan: its storage level is the cache
-    // manager's entry for that plan, whoever cached it
-    val triples = frame.groupBy("title", "appId", "score")
-      .agg(max("minInstalls").as("maxInstalls"))
-    def cached = triples.storageLevel.useMemory
+    val frame = Seq(("a.1", "One", "Tools", 4.0f, 10L, 0), ("a.2", "Two", "Games", 3.0f, 20L, 0))
+      .toDF("appId", "title", "genre", "score", "minInstalls", "cluster")
+    // the cache manager's entry count (Scala-private to Spark's sql
+    // package, public in its bytecode)
+    val cacheManager = spark.sharedState.cacheManager
+    def cached = cacheManager.getClass.getMethod("numCachedEntries").invoke(cacheManager)
     def serveOnce(): Unit = {
-      val before = serverThreads
+      val (before, entries) = (serverThreads, cached)
       val s = new ApiServer(new QueryService(frame), 0)
       s.start()
       val (code, body) = get("/check_data", s.boundPort)
       assert(code == 200 && body.contains("\"row_count\": 2"))
-      assert(get("/search_app_suggestions?q=tw", s.boundPort)._2.contains("a.2"))
-      assert(cached, "a search caches the aggregate it filters")
+      for (p <- Seq("/categories", "/search_app_suggestions?q=tw", "/app_details_by_id/a.2",
+          "/recommend_apps_by_category/tools", "/top_apps?category=games",
+          "/recommend_similar_app_by_name/one", "/apps_in_cluster/0"))
+        assert(get(p, s.boundPort)._1 == 200, p)
+      assert(cached == entries, "the query layer must leave nothing in the cache manager")
       val mine = serverThreads -- before
       assert(mine.nonEmpty, "the request must have run on an api-server thread")
       s.stop()
-      assert(!cached, "stop() must release the search aggregate")
+      assert(cached == entries, "stop() must leave the cache manager as it found it")
       mine.foreach(_.join(10000))
       assert(mine.forall(!_.isAlive), s"left alive: ${mine.filter(_.isAlive).map(_.getName)}")
     }

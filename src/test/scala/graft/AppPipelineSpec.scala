@@ -196,17 +196,14 @@ class AppPipelineSpec extends AnyFunSuite {
     assert(svc.appsInCluster(0).isDefined)
     val noCluster = new QueryService(served.drop("cluster"))
     assert(noCluster.appsInCluster(0).isEmpty)
-    svc.close()
   }
 
   test("search suggestions are the true top 15 by (highest installs desc, appId)") {
     val want = dupTriples.filter(_._1.toLowerCase.contains("dup"))
       .groupBy(r => (r._1, r._2, r._3)).view.mapValues(_.map(_._4).max).toSeq
-      .sortBy { case ((_, id, _), n) => (-n, id) }.take(15).map(_._1)
-    val svc = new QueryService(dupTripleFrame)
-    val got = svc.searchSuggestions("dup").collect()
+      .sortBy { case ((title, id, score), n) => (-n, id, title, score) }.take(15).map(_._1)
+    val got = new QueryService(dupTripleFrame).searchSuggestions("dup").collect()
       .map(r => (r.getString(0), r.getString(1), r.getFloat(2))).toSeq
-    svc.close()
     assert(got == want)
   }
 
@@ -216,22 +213,37 @@ class AppPipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     val byScore = Seq(desc("score"), asc("appId"))
-    // planted next to the trained rows: two rows with a null genre, and
-    // one app stored 12 times at the top of the largest cluster, so its
-    // own id fills more than 10 of that cluster's top 20 and the similar
-    // route must fall back to the full query
+    // planted next to the trained rows, every planted title holding "app"
+    // like the trained ones: two rows with a null genre; one app stored
+    // 12 times at the top of the largest cluster, so its own id fills
+    // more than 10 of that cluster's top 20 and the similar route must
+    // fall back to the full query; two different rows sharing one id,
+    // whose first in partition order is the details answer (they differ
+    // in every column a top_apps sort could tie them on within the top
+    // 21); and a non-ASCII title
     val big = served.groupBy("cluster").count().filter(col("cluster").isNotNull)
       .orderBy(desc("count"), asc("cluster")).head().getInt(0)
     val template = served.filter(col("cluster") === big).head()
     def copy(changes: (String, Any)*): Row = Row.fromSeq(changes.foldLeft(template.toSeq) {
       case (row, (c, v)) => row.updated(served.schema.fieldIndex(c), v) })
+    val twin = "app.id.35.twin"
     val planted = Seq(1, 2).map(i =>
-        copy("appId" -> s"planted.null.$i", "title" -> s"Planted Null $i", "genre" -> null)) ++
-      Seq.fill(12)(copy("appId" -> "planted.dup", "title" -> "Planted Dup", "score" -> 9.5f))
+        copy("appId" -> s"planted.null.$i", "title" -> s"App Planted Null $i", "genre" -> null)) ++
+      Seq.fill(12)(copy("appId" -> "planted.dup", "title" -> "App Planted Dup", "score" -> 9.5f)) ++
+      Seq(copy("appId" -> twin, "title" -> "App Twin A", "genre" -> null, "score" -> 1.25f,
+          "minInstalls" -> 777L, "price" -> 0.11, "PredictedRating" -> 2.5f),
+        copy("appId" -> twin, "title" -> "App Twin B", "genre" -> null, "score" -> 1.5f,
+          "minInstalls" -> 778L, "price" -> 0.12, "cluster" -> null, "PredictedRating" -> 2.75f),
+        copy("appId" -> "planted.cafe", "title" -> "App Ärger Café", "score" -> 2.25f))
     val frame = served.union(spark.createDataFrame(planted.asJava, served.schema)).cache()
     val svc = new QueryService(frame)
     def same(what: String, got: Seq[Row], want: Seq[Row]): Unit =
       assert(got == want, s"$what: memoised $got, declarative $want")
+    def searchQuery(f: DataFrame, q: String) =
+      f.filter(lower(col("title")).contains(q.toLowerCase))
+        .groupBy("title", "appId", "score").agg(max("minInstalls").as("maxInstalls"))
+        .orderBy(desc("maxInstalls"), asc("appId"), asc("title"), asc("score")).limit(15)
+        .select("title", "appId", "score").collect().toSeq
     try {
       assert(frame.filter(col("cluster") === big).count() > QueryService.RankDepth,
         "the fallback needs a cluster larger than a ranking")
@@ -239,22 +251,49 @@ class AppPipelineSpec extends AnyFunSuite {
       assert(genres.contains(null))
       def mixed(g: String) = g.zipWithIndex.map { case (ch, i) =>
         if (i % 2 == 0) ch.toUpper else ch.toLower }.mkString
-      for (g <- genres.filter(_ != null).flatMap(g => Seq(g, mixed(g))) :+ "NoSuchGenre")
+      val stored = genres.filter(_ != null)
+      def inGenre(g: String) = frame.filter(lower(col("genre")) === g.toLowerCase)
+      for (g <- stored.flatMap(g => Seq(g, mixed(g))) :+ "NoSuchGenre")
         same(s"category $g", svc.recommendByCategory(g).collect().toSeq,
-          frame.filter(lower(col("genre")) === g.toLowerCase)
-            .orderBy(desc("score"), desc("minInstalls"), asc("appId")).limit(20).collect().toSeq)
+          inGenre(g).orderBy(desc("score"), desc("minInstalls"), asc("appId")).limit(20).collect().toSeq)
       val clusters = frame.select("cluster").distinct().collect()
         .filterNot(_.isNullAt(0)).map(_.getInt(0)).toSeq
       for (c <- clusters :+ 99 :+ -1)
         same(s"cluster $c", svc.appsInCluster(c).get.collect().toSeq,
           frame.filter(col("cluster") === c).orderBy(byScore: _*).limit(20).collect().toSeq)
+      // top_apps, every column and category: ties under (column desc,
+      // appId) are only between identical rows, so filtering the sorted
+      // frame by genre and taking `limit` rows is the declarative answer,
+      // one sort per column for every category and limit; a limit past
+      // the rankings runs that query itself, checked for every column and,
+      // on score, for every category
+      val limits = Seq(0, 1, 10, QueryService.RankDepth)
+      val deep = QueryService.RankDepth + 1
+      val categories = None +: (stored.map(mixed) :+ "NoSuchGenre").map(Some(_))
+      for (c <- frame.columns) {
+        val sorted = frame.select(col("*"), lower(col("genre")))
+          .orderBy(desc(c), asc("appId")).collect().toSeq
+        for (g <- categories) {
+          val want = sorted.filter(r => g.forall(_.toLowerCase == r.getString(r.length - 1)))
+            .map(r => Row.fromSeq(r.toSeq.init))
+          for (n <- limits)
+            same(s"top_apps $c $g $n", svc.topApps(c, n, g).get.collect().toSeq, want.take(n))
+          if (g.isEmpty || c == "score")
+            same(s"top_apps $c $g $deep", svc.topApps(c, deep, g).get.collect().toSeq, want.take(deep))
+        }
+      }
+      // details: each id's first row in partition order
+      for (id <- frame.select("appId").distinct().collect().map(_.getString(0)) :+ "no.such.app")
+        same(s"details $id", svc.appDetailsById(id).collect().toSeq,
+          frame.filter(col("appId") === id).coalesce(1).limit(1).collect().toSeq)
+      assert(svc.appDetailsById(twin).head().getAs[String]("title") == "App Twin A")
       // the similar route's declarative answer for every title in one
       // job: each title's lookup row is its first in partition order
       // (what the route's `limit(1)` lookup returned), and its answer the
       // top 10 of that row's cluster without that row's id
       val selves = frame.select("title", "appId", "cluster").collect()
         .groupBy(_.getString(0).toLowerCase).view.mapValues(_.head).toMap
-      assert(selves.contains("planted dup"))
+      assert(selves.contains("app planted dup"))
       val want = frame.join(broadcast(selves.values.toSeq.filterNot(_.isNullAt(2))
           .map(r => (r.getString(0), r.getString(1), r.getInt(2)))
           .toDF("self_title", "self_id", "self_cluster")),
@@ -268,18 +307,19 @@ class AppPipelineSpec extends AnyFunSuite {
         val got = svc.similarAppsByName(t)
         assert(got.isDefined == !self.isNullAt(2), s"similar $t: 404 differs")
         got.foreach(g => same(s"similar $t", g.collect().toSeq, want.getOrElse(self.getString(0), Nil)))
-        if (t == "planted dup")
+        if (t == "app planted dup")
           assert(tools.Inspect.finalPlan(got.get).startsWith("TakeOrderedAndProject"),
             "a ranking prefix filled by the app's own id must fall back to the query")
       }
-    } finally { svc.close(); frame.unpersist() }
+      // search: every row a hit, a non-ASCII hit, no hit
+      assert(frame.filter(!lower(col("title")).contains("app")).isEmpty)
+      assert(svc.searchSuggestions("ÄRGER CAFÉ").count() == 1)
+      for (q <- Seq("app", "ÄRGER CAFÉ", "zz"))
+        same(s"search $q", svc.searchSuggestions(q).collect().toSeq, searchQuery(frame, q))
+    } finally frame.unpersist()
+    // search over duplicate triples, with ties across triples
     val dups = new QueryService(dupTripleFrame)
-    try for (q <- Seq("dup", "DUP APP 1", "app 3", "other", "zz"))
-      same(s"search $q", dups.searchSuggestions(q).collect().toSeq,
-        dupTripleFrame.filter(lower(col("title")).contains(q.toLowerCase))
-          .groupBy("title", "appId", "score").agg(max("minInstalls").as("maxInstalls"))
-          .orderBy(desc("maxInstalls"), asc("appId")).limit(15).select("title", "appId", "score")
-          .collect().toSeq)
-    finally dups.close()
+    for (q <- Seq("dup", "DUP APP 1", "app 3", "other", "zz"))
+      same(s"search $q", dups.searchSuggestions(q).collect().toSeq, searchQuery(dupTripleFrame, q))
   }
 }
